@@ -10,11 +10,28 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+def effective_master(master: str | None = None) -> str:
+    """The master the session will run on: the argument, else
+    ``SPARK_MASTER``, else the launcher's ``spark.master`` (``--master``
+    or spark-defaults.conf) when its JVM is already up, as under
+    ``spark-submit``, else local.  A JVM that is not up yet is not
+    started here: ``getOrCreate`` must launch it with the builder's
+    driver memory and JVM options."""
+    explicit = master or os.environ.get("SPARK_MASTER")
+    if explicit:
+        return explicit
+    if SparkContext._jvm is None and "PYSPARK_GATEWAY_PORT" not in os.environ:  # noqa: SLF001
+        return "local"
+    SparkContext._ensure_initialized()  # noqa: SLF001 (connects, launches nothing)
+    return SparkConf().get("spark.master", "local[*]")
 
 
 def get_spark(
@@ -39,8 +56,7 @@ def get_spark(
     # cluster master the Spark defaults (4 MB open cost, 1 MB AQE floor)
     # are kept — many-small-file workloads there would otherwise
     # multiply task counts.  The env overrides still apply to both.
-    eff_master = master or os.environ.get("SPARK_MASTER") or f"local[{cpus}]"
-    is_local = eff_master.startswith("local")
+    is_local = effective_master(master).startswith("local")
     open_cost = os.environ.get(
         "SPARK_GRAFT_OPEN_COST", str(64 * 1024) if is_local else None
     )
@@ -113,7 +129,7 @@ def get_spark(
     )
     if master:
         builder = builder.master(master)
-    elif not os.environ.get("SPARK_MASTER"):
+    elif is_local and not os.environ.get("SPARK_MASTER"):
         builder = builder.master(f"local[{cpus}]")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -13,9 +13,10 @@ Reference semantics rebuilt:
   writer so the fallback runs executor-side, per partition, at scale.
 
 Spark design: routing is a single ``CASE WHEN`` column (one pass over the
-data, whole-stage codegen, no per-route rescans), then one write per route
-filtered on that column.  In streaming mode, wrap :meth:`SQLOutput.write_batch`
-in ``foreachBatch``.
+data, whole-stage codegen, no per-route rescans).  One observed job caches
+the routed batch and counts every route's rows; then each non-empty route
+writes its slice, filtered on that column, and an empty route costs no job.
+In streaming mode, wrap :meth:`SQLOutput.write_batch` in ``foreachBatch``.
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ import logging
 import time as _time
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..config import SinkRoute, SQLOutputConfig, strip_tag_prefix_regex
@@ -120,25 +121,38 @@ class SQLOutput:
     def write_batch(self, df: DataFrame, tag_col: str = "tag") -> dict[str, int]:
         """Route one micro-batch/chunk to its tables (out_sql.rb:226-237).
 
-        The routed frame is cached once (bounded: one micro-batch), then
-        each ROUTE writes its slice through its OWN column_mapping — N
-        small writes off one shared scan, not N rescans of the source.
-        Counts aggregate per table (two routes may share a table).
+        The routed frame is cached once (bounded: one micro-batch) by a
+        single job that observes each route's row count.  Each non-empty
+        ROUTE then writes its slice through its OWN column_mapping — small
+        writes off one shared scan, not rescans of the source — and an
+        empty route is skipped without a job.  Returns rows per table,
+        summed over routes that share a table, with 0 for a table whose
+        routes got no row.
         """
         routed = self.prepare(df, tag_col).cache()
         written: dict[str, int] = {}
         try:
             slices = list(enumerate(self.config.pattern_routes))
             slices.append((-1, self.config.default_route))
-            for idx, route in slices:
+            obs = Observation()
+            routed.observe(
+                obs,
+                *(
+                    F.count_if(F.col("_route_idx") == idx).alias(f"n{j}")
+                    for j, (idx, _) in enumerate(slices)
+                ),
+            ).write.format("noop").mode("overwrite").save()
+            counts = obs.get
+            for j, (idx, route) in enumerate(slices):
+                n = counts[f"n{j}"]
+                written[route.table] = written.get(route.table, 0) + n
+                if not n:
+                    continue
                 part = routed.where(F.col("_route_idx") == idx).drop("_route_idx")
                 mapping = route.mapping_pairs()
                 if mapping:
                     part = apply_column_mapping(part, mapping)
-                n = part.count()
-                if n:
-                    self.write(part, route.table)
-                written[route.table] = written.get(route.table, 0) + n
+                self.write(part, route.table)
             return written
         finally:
             routed.unpersist()

@@ -22,7 +22,9 @@ source (JDBC: into the generated SQL; Parquet: filter pushdown + TakeOrdered).
 The poll loop is driver-side orchestration only; each batch is bounded by
 ``select_limit`` so caching it before the emit/checkpoint pair is O(limit),
 independent of table size — this is what makes the design 100 TB-safe: we
-never materialize more than one batch.
+never materialize more than one batch.  One Spark job per poll builds that
+cache, and an ``Observation`` on it yields the row count and the checkpoint
+tail, so an empty poll costs exactly that one job.
 """
 
 from __future__ import annotations
@@ -32,7 +34,7 @@ import time as _time
 from collections.abc import Callable
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import SourceTable, SQLInputConfig
@@ -190,7 +192,12 @@ class SQLInput:
 
     def poll_table(self, name: str) -> int:
         """One poll of one table: plan → cache bounded batch → emit →
-        advance checkpoint to the last emitted row.  Returns rows emitted."""
+        advance checkpoint to the last emitted row.  Returns rows emitted.
+
+        The cache is materialized by one observed job whose metrics are
+        the row count and ``max(struct(update_column[, tiebreak]))`` — the
+        last emitted row — so neither needs a job of its own.  An empty
+        batch returns after that job without calling ``emit``."""
         table, scan = self.scans[name]
         last = self.state.last_record(name)
         last_value = last.get(scan.update_column) if last else None
@@ -210,20 +217,25 @@ class SQLInput:
         # same rows without a rescan.
         batch = batch.cache()
         try:
-            rows = batch.count()
+            # the tail is the last *emitted* row by (update_column
+            # [, tiebreak]) order (in_sql.rb:151-158).  max(struct)
+            # compares field by field with NULL lowest, so it picks the row
+            # a ``desc(...)`` sort (nulls last) puts first.
+            key = [scan.update_column]
+            if scan.tiebreak_column:
+                key.append(scan.tiebreak_column)
+            obs = Observation()
+            batch.observe(
+                obs,
+                F.count(F.lit(1)).alias("rows"),
+                F.max(F.struct(*key)).alias("tail"),
+            ).write.format("noop").mode("overwrite").save()
+            m = obs.get
+            rows = m["rows"]
             if rows == 0:
                 return 0
             self.emit(self.config.tag_for(table), batch)
-            # last *emitted* row, by (update_column [, tiebreak]) order
-            # (in_sql.rb:151-158)
-            tail_order = [F.col(scan.update_column).desc()]
-            if scan.tiebreak_column:
-                tail_order.append(F.col(scan.tiebreak_column).desc())
-            tail = batch.orderBy(*tail_order).limit(1).collect()
-            new_last = {scan.update_column: tail[0][scan.update_column]}
-            if scan.tiebreak_column:
-                new_last[scan.tiebreak_column] = tail[0][scan.tiebreak_column]
-            self.state.update(name, new_last)
+            self.state.update(name, m["tail"].asDict())
             return rows
         finally:
             batch.unpersist()

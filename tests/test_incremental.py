@@ -7,6 +7,7 @@ checks, tie handling at the watermark, time fallback, state-file resume.
 from __future__ import annotations
 
 import datetime as dt
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,6 +19,7 @@ from fluent_plugin_sql_spark.sources.incremental import (
     discover_tables,
     resolve_event_time,
 )
+from fluent_plugin_sql_spark.sources.jdbc import sql_literal
 from fluent_plugin_sql_spark.state import MemoryStateStore, StateStore
 
 NOW = dt.datetime(2024, 6, 1, 12, 0, 0)
@@ -214,6 +216,85 @@ def test_composite_watermark_exact_resume_on_ties(spark, sf_dir, tmp_path):
     # state holds the composite pair
     st = StateStore(str(tmp_path / "state.json")).last_record("events")
     assert set(st) == {"ts_hour", "event_id"}
+
+
+_TS = dt.datetime(2024, 11, 3, 1, 30, 0, 250000)  # a US DST fold hour
+_D = dt.date(2024, 2, 29)
+TAIL_CASES = {
+    "long_ties_by_tiebreak": (
+        "u long, k string",
+        [(1, "a"), (3, "b"), (3, "d"), (2, "z"), (3, "c"), (4, "a"), (4, "b")],
+        "k",
+    ),
+    "long_null_first_poll": (
+        "u long, k long",
+        [(None, 9), (5, 2), (None, 1), (5, 1), (4, 7), (6, 0)],
+        None,
+    ),
+    "long_null_first_poll_tiebreak": (
+        "u long, k long",
+        [(None, 9), (5, 2), (None, 1), (5, 1), (4, 7), (6, 0)],
+        "k",
+    ),
+    "all_null": ("u long, k long", [(None, 1), (None, 3)], "k"),
+    "timestamp": (
+        "u timestamp, k long",
+        [(_TS, 1), (_TS + dt.timedelta(microseconds=1), 2), (_TS, 3),
+         (_TS + dt.timedelta(hours=1), 4), (None, 5), (_TS + dt.timedelta(days=1), 6)],
+        "k",
+    ),
+    "date": (
+        "u date, k long",
+        [(_D, 1), (_D, 2), (_D - dt.timedelta(days=1), 3),
+         (_D + dt.timedelta(days=1), 4), (_D + dt.timedelta(days=1), 5)],
+        "k",
+    ),
+    "decimal": (
+        "u decimal(12,4), k long",
+        [(Decimal("12.3400"), 1), (Decimal("12.3400"), 2), (Decimal("-1.0000"), 3),
+         (Decimal("99.0001"), 4), (Decimal("99.0001"), 5)],
+        "k",
+    ),
+    "string": (
+        "u string, k long",
+        [("b", 1), ("a\\'x", 2), ("b", 3), ("B", 4), ("ba", 5), ("é", 6)],
+        None,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(TAIL_CASES))
+def test_observed_tail_matches_sorted_tail(spark, case):
+    """The checkpoint tail observed with ``max(struct(upd[, tie]))`` must
+    be the row the sorted ``desc(...).limit(1)`` tail picks, with the same
+    Python type and value: the JSON state file and the JDBC watermark
+    literal (``sql_literal``) both dispatch on that type."""
+    ddl, rows, tie = TAIL_CASES[case]
+    src = spark.createDataFrame(rows, ddl)
+    key = ["u"] + ([tie] if tie else [])
+    expected = []
+
+    def emit(tag, df):
+        # the sorted tail the checkpoint used before it was observed
+        order = [F.col(c).desc() for c in key]
+        top = df.orderBy(*order).limit(1).collect()[0]
+        expected.append({c: top[c] for c in key})
+
+    cfg = SQLInputConfig(
+        tables=[SourceTable(table="t", update_column="u", tiebreak_column=tie)],
+        select_limit=4,
+    )
+    inp = SQLInput(spark, cfg, {"t": lambda: src}, emit=emit, now=NOW)
+    for _ in range(3):
+        if inp.poll_table("t") == 0:
+            break
+        got = inp.state.last_record("t")
+        assert got == expected[-1]
+        for c in key:
+            assert type(got[c]) is type(expected[-1][c]), c
+            # Decimal("12.34") == Decimal("12.3400"); the literal pins the scale
+            assert sql_literal(got[c], "derby") == sql_literal(expected[-1][c], "derby")
+    assert expected
 
 
 def test_reset_to_replays_from_watermark(spark, sf_dir, tmp_path):

@@ -69,6 +69,45 @@ def test_round_trip_golden(spark, tmp_path):
     assert pipe2.run_once() == {"events": 0}
 
 
+def _jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store learns of jobs from the listener bus, asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_poll_tick_job_count(spark, tmp_path):
+    """A busy tick is one observed job for the poll (count + tail), one
+    for the route histogram and one write per non-empty route; an empty
+    poll is one job.  The default route gets no row here, so its writer
+    is never called and its table is never created."""
+    load_table(spark, SF, "events")  # the one-off schema read, outside the count
+    pipe = Pipeline(spark, make_config(tmp_path))
+    written = []
+    write = pipe.output.write
+
+    def spy(df, table):
+        written.append(table)
+        write(df, table)
+
+    pipe.output.write = spy
+    group = f"tick-{tmp_path.name}"
+    emitted, busy = _jobs(spark, f"{group}-busy", lambda: pipe.run_once(drain=False))
+    assert emitted == {"events": 300}
+    assert busy <= 2 + 1
+    pipe.run_once(drain=True)
+    emitted, idle = _jobs(spark, f"{group}-idle", lambda: pipe.run_once(drain=False))
+    assert emitted == {"events": 0}
+    assert idle == 1
+    assert set(written) == {"event_errors"}
+    assert not (tmp_path / "out" / "catch_all").exists()
+
+
 def test_yaml_config_loads(tmp_path):
     p = tmp_path / "cfg.yaml"
     p.write_text(

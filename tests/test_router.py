@@ -61,10 +61,11 @@ def test_earlier_catchall_shadows_later_pattern(spark, tagged_df):
         ],
         remove_tag_prefix="db",
     )
-    SQLOutput(cfg, write).write_batch(tagged_df)
+    counts = SQLOutput(cfg, write).write_batch(tagged_df)
     assert out["t_all"] == [1, 2, 3]
-    assert "t_clicks" not in out
+    assert "t_clicks" not in out  # an empty route's writer is never called
     assert out["t_default"] == [4]
+    assert counts == {"t_all": 3, "t_clicks": 0, "t_default": 1}
 
 
 def test_column_mapping_drops_unmapped(spark, tagged_df):
@@ -117,6 +118,26 @@ def test_two_routes_same_table_keep_own_mappings(spark, tagged_df):
     assert counts == {"t_shared": 4}  # per-table counts aggregate
 
 
+def test_empty_slice_of_shared_table_adds_zero(spark, tagged_df):
+    writes = []
+
+    def write(df, table):
+        writes.append((table, df.count()))
+
+    cfg = SQLOutputConfig(
+        routes=[
+            SinkRoute(table="t_shared", pattern="nothing.matches"),
+            SinkRoute(table="t_shared", pattern="clicks"),
+            SinkRoute(table="t_empty", pattern="nor.this"),
+            SinkRoute(table="t_shared"),
+        ],
+        remove_tag_prefix="db",
+    )
+    counts = SQLOutput(cfg, write).write_batch(tagged_df)
+    assert sorted(writes) == [("t_shared", 2), ("t_shared", 2)]
+    assert counts == {"t_shared": 4, "t_empty": 0}
+
+
 def test_resilient_writer_bulk_then_row_fallback():
     # out_sql.rb:103-136 / test_out_sql.rb:83-119: bulk raises → one-by-one,
     # poison row retried num_retries times then dropped.
@@ -167,6 +188,7 @@ def test_quarantine_time_fallback_routing(spark):
         ],
         remove_tag_prefix="db",
     )
-    SQLOutput(cfg, write).write_batch(routed_src)
+    counts = SQLOutput(cfg, write).write_batch(routed_src)
     assert out["t_quarantine"] == [2, 3]  # NULL + unparseable diverted
     assert out["t_clean"] == [1]
+    assert counts == {"t_quarantine": 2, "t_clean": 1}
